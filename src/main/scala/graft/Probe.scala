@@ -3,12 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.checks.Checks
 import graft.engine.Validator
-import graft.sources.TranscriptGen
 
-/** Ad-hoc stage profiler for the validation pipeline (not part of the driver
-  * contract). Times isolated variants to attribute costs.
+/** Ad-hoc profiler. Modes: `q`, `jq`, `qtime` and `plans` time, count or
+  * explain [[SparkEntry.queries]] entries; `runner` splits the validate job
+  * into its sinks; `control` is the host-ceiling control.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -172,68 +171,8 @@ object Probe {
       return
     }
 
-    val tPath = args.headOption.getOrElse("/tmp/graft_bench/transcripts_n8000000")
-    val turns = spark.read.parquet(tPath)
-
-    val checks = Checks.transcriptChecks
-
-    time("scan all cols")(noop(turns))
-    // pure predicate cost, no array/struct/explode
-    time("predicates only")(noop(turns.select(
-      checks.map(c => coalesce(c.violated, lit(false)).cast("int"))
-        .reduce(_ + _).as("nv"))))
-    // predicates + guard + array build + HOF filter + explode (current impl)
-    time("rowViolations current")(noop(Validator.rowViolations(turns)))
-    // variant: explode all entries then relational filter (no HOF)
-    val structsAll = array(checks.map(c =>
-      when(c.violated, struct(lit(c.ruleId).as("rule_id"),
-        lit(c.field).as("field"), c.message.as("message")))): _*)
-    val anyV = checks.map(c => coalesce(c.violated, lit(false))).reduce(_ || _)
-    time("rowViolations explode+where")(noop(
-      turns
-        .where(anyV)
-        .select(col("conv_id"), col("turn_idx"), col("part_id"), col("text"),
-          explode(structsAll).as("v"))
-        .where(col("v").isNotNull)
-        .select(col("conv_id"), col("turn_idx"), col("part_id"),
-          col("v.rule_id"), col("v.field"), col("v.message"), col("text"))))
-    // variant: union of per-check filtered scans
-    time("rowViolations union-scans")(noop(
-      checks.map { c =>
-        turns.where(c.violated).select(
-          col("conv_id"), col("turn_idx"), col("part_id"),
-          lit(c.ruleId).as("rule_id"), lit(c.field).as("field"),
-          c.message.as("message"), col("text"))
-      }.reduce(_ unionByName _)))
-    // variant: shuffle only xxhash64(conv_id, turn_idx) — 8-byte keys both
-    // phases; candidate hashes re-verified exactly (and text attached) at
-    // the rare join-back, so 64-bit collisions cannot emit false duplicates
-    def dupHashed(): DataFrame = {
-      val kh = xxhash64(col("conv_id"), col("turn_idx"))
-      val salted = turns
-        .groupBy(kh.as("kh"),
-          pmod(xxhash64(col("role"), col("text"), col("ts")), lit(16))
-            .as("salt"))
-        .agg(count(lit(1)).as("c"))
-      val candidates = salted
-        .groupBy("kh").agg(sum("c").as("n")).filter(col("n") > 1)
-        .select("kh")
-      turns
-        .select(col("conv_id"), col("turn_idx"), col("part_id"), col("text"),
-          kh.as("kh"))
-        .join(candidates, Seq("kh"))
-        .groupBy(col("conv_id"), col("turn_idx"))
-        .agg(count(lit(1)).as("n"), min("text").as("text"),
-          min("part_id").as("part_id"))
-        .filter(col("n") > 1)
-    }
-    // alternate the variants: host speed drifts run to run, so only
-    // same-round adjacency is comparable
-    (1 to 3).foreach { r =>
-      time(s"dup current   r$r")(noop(Validator.dupViolations(turns)))
-      time(s"dup hashed    r$r")(noop(dupHashed()))
-    }
-    time("tsOrder")(noop(Validator.tsOrderViolations(turns)))
     spark.stop()
+    sys.error(s"unknown Probe mode ${args.headOption.getOrElse("(none)")}; " +
+      "expected q, jq, qtime, plans, runner or control")
   }
 }

@@ -18,6 +18,18 @@ object Validator {
   val violationCols: Seq[String] =
     Seq("conv_id", "turn_idx", "part_id", "rule_id", "field", "message", "text")
 
+  /** Default budget of [[fitsBroadcast]]. */
+  val broadcastBudgetBytes: Long = 64L << 20
+
+  /** The broadcast-size gate every stats-driven join shares: true when the
+    * optimizer's size estimate of `df` is within `thresholdBytes`, so the
+    * join may broadcast `df` instead of shuffling both sides. Over the
+    * budget, callers keep a plain join and let the planner pick SMJ.
+    */
+  def fitsBroadcast(
+      df: DataFrame, thresholdBytes: Long = broadcastBudgetBytes): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes <= thresholdBytes
+
   /** Per-row checks compiled to one projection + explode. Whole-stage
     * codegen'd; reads only the columns the catalog references (Catalyst
     * prunes the rest through the scan).
@@ -188,11 +200,11 @@ object Validator {
   def orphanViolations(
       turns: DataFrame,
       conversations: DataFrame,
-      broadcastThresholdBytes: Long = 64L << 20): DataFrame = {
+      broadcastThresholdBytes: Long = broadcastBudgetBytes): DataFrame = {
     val dimKeys = conversations.select("conv_id")
-    val dimSize = dimKeys.queryExecution.optimizedPlan.stats.sizeInBytes
     val dim =
-      if (dimSize <= broadcastThresholdBytes) broadcast(dimKeys) else dimKeys
+      if (fitsBroadcast(dimKeys, broadcastThresholdBytes)) broadcast(dimKeys)
+      else dimKeys
     turns
       .join(dim, Seq("conv_id"), "left_anti")
       .select(
@@ -231,14 +243,13 @@ object Validator {
       idCols: Seq[String],
       ruleId: String = "TS_BEFORE_PARENT",
       parentKeyCol: Option[String] = None,
-      broadcastThresholdBytes: Long = 64L << 20): DataFrame = {
+      broadcastThresholdBytes: Long = broadcastBudgetBytes): DataFrame = {
     val dim = parent
       .select(col(parentKeyCol.getOrElse(keyCol)).as(keyCol),
         col(parentTsCol).as("__pts"))
       .groupBy(keyCol).agg(min("__pts").as("__pts"))
-    val dimSize = dim.queryExecution.optimizedPlan.stats.sizeInBytes
     val dimHinted =
-      if (dimSize <= broadcastThresholdBytes) broadcast(dim) else dim
+      if (fitsBroadcast(dim, broadcastThresholdBytes)) broadcast(dim) else dim
     child
       .select((keyCol +: idCols).distinct.map(col) :+
         col(childTsCol).as("__cts"): _*)
@@ -449,8 +460,8 @@ object Validator {
       checks: Seq[Check] = Checks.transcriptChecks,
       saltFactor: Int = 16,
       sortOutput: Boolean = true): DataFrame = {
-    // When the dim's key set fits the broadcast budget (the
-    // orphanViolations stats gate), the referential check rides the SAME
+    // When the dim's key set fits the broadcast budget
+    // ([[fitsBroadcast]]), the referential check rides the SAME
     // scan as the row checks: one broadcast left-join marks dim presence
     // and ORPHAN_CONV becomes one more compiled rule in the row-check
     // explode — removing the orphan branch's separate full-width text scan
@@ -460,8 +471,7 @@ object Validator {
     // dims keep the standalone anti-join branch unchanged.
     val merged = conversations.flatMap { dim =>
       val dimKeys = dim.select("conv_id").distinct()
-      val dimSize = dimKeys.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (dimSize <= (64L << 20)) {
+      if (fitsBroadcast(dimKeys)) {
         val orphanCheck: Check = new Check {
           val ruleId = "ORPHAN_CONV"
           val field = "conv_id"

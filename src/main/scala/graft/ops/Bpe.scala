@@ -76,15 +76,15 @@ object Bpe {
     // LAZY checkpoints throughout (the Connected rule): each round's
     // pair-count collect is the first action over the freshly rewritten
     // vocab, so it materializes the checkpoint inside the same job — one
-    // scheduler round-trip per merge instead of two. The superseded round
-    // is unpersisted only AFTER the collect materialized its successor.
+    // scheduler round-trip per merge instead of two. A superseded round's
+    // blocks are released by the ContextCleaner once nothing references
+    // its frame (Dataset.unpersist does not apply to checkpoints).
     var vocab = wordFreqs
       .select(col("freq"),
         transform(sequence(lit(1), length(col("word"))),
           i => col("word").substr(i, lit(1))).as("syms"))
       .filter(size(col("syms")) >= 1)
       .localCheckpoint(false)
-    var prev: Option[DataFrame] = None
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var i = 0
     var done = false
@@ -98,21 +98,15 @@ object Bpe {
         .orderBy(col("n").desc, col("a").asc, col("b").asc)
         .limit(1) // TakeOrderedAndProject; ONE row reaches the driver
         .collect() // materializes `vocab` (and its checkpoint)
-      prev.foreach(_.unpersist())
-      prev = None
       if (best.isEmpty) done = true
       else {
         val (a, b) = (best(0).getString(0), best(0).getString(1))
         merges += ((a, b))
-        val next = vocab
+        vocab = vocab
           .select(col("freq"), applyMerge(col("syms"), a, b).as("syms"))
           .localCheckpoint(false)
-        prev = Some(vocab)
-        vocab = next
       }
     }
-    vocab.unpersist()
-    prev.foreach(_.unpersist())
     merges.toSeq
   }
 
@@ -155,14 +149,13 @@ object Bpe {
       maxBatch: Int = 64): Seq[(String, String)] = {
     require(nMerges >= 1 && nMerges <= 100000, "nMerges in [1, 100000]")
     require(maxBatch >= 1 && maxBatch <= 256, "maxBatch in [1, 256]")
-    // lazy checkpoints + unpersist-after-materialize: see [[learnMerges]]
+    // lazy per-round checkpoints: see [[learnMerges]]
     var vocab = wordFreqs
       .select(col("freq"),
         transform(sequence(lit(1), length(col("word"))),
           i => col("word").substr(i, lit(1))).as("syms"))
       .filter(size(col("syms")) >= 1)
       .localCheckpoint(false)
-    var prev: Option[DataFrame] = None
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var done = false
     while (merges.size < nMerges && !done) {
@@ -177,8 +170,6 @@ object Bpe {
         .orderBy(col("n").desc, col("a").asc, col("b").asc)
         .limit(want * 4)
         .collect() // materializes `vocab` (and its checkpoint)
-      prev.foreach(_.unpersist())
-      prev = None
       val used = scala.collection.mutable.HashSet.empty[String]
       val batch = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
       var i = 0
@@ -192,15 +183,11 @@ object Bpe {
       if (batch.isEmpty) done = true
       else {
         merges ++= batch
-        val next = vocab
+        vocab = vocab
           .select(col("freq"), applyMerges(col("syms"), batch.toSeq).as("syms"))
           .localCheckpoint(false)
-        prev = Some(vocab)
-        vocab = next
       }
     }
-    vocab.unpersist()
-    prev.foreach(_.unpersist())
     merges.toSeq
   }
 

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Connected components over an edge list — the clustering step that turns
   * near-duplicate PAIRS (minhash/simhash/cosine output) into duplicate
@@ -19,15 +20,15 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: edge rows are two longs — the shuffles stay tiny relative
   * to any text/dedup stage that produced the pairs; every round's result is
-  * persisted and the previous round unpersisted, so peak footprint is two
-  * edge sets; lineage is truncated with localCheckpoint every few rounds so
-  * the plan does not grow across iterations (on a cluster this would be
-  * `checkpoint` to the reliable store).
+  * a lazy localCheckpoint, which truncates lineage so the plan does not
+  * grow across iterations (on a cluster this would be `checkpoint` to the
+  * reliable store). A superseded round's blocks stay cached until the
+  * ContextCleaner drops them after its frame becomes unreachable.
   */
 object Connected {
 
   /** Canonical undirected edge form: (a, b) with a > b, self-loops dropped,
-    * duplicates collapsed. Input columns must be two numeric id columns
+    * duplicates collapsed. Input columns must be two integral id columns
     * named `a` and `b`.
     */
   private def canonical(e: DataFrame): DataFrame =
@@ -85,11 +86,6 @@ object Connected {
       .select(col("na").as("a"), col("nb").as("b"))
   }
 
-  /** Component assignment for every node that appears in `edges` (cols
-    * `a`, `b`): returns (id, component) where component = min node id
-    * reachable. Nodes with no edges are the caller's to union in (they are
-    * their own component and never entered the edge list).
-    */
   /** Size-gated LOCAL fast path for [[components]]: a graph whose
     * canonical edge count is at or under the threshold collects to the
     * driver (bounded: 100k edges = 1.6 MB of longs, the same bounded-
@@ -130,9 +126,22 @@ object Connected {
         col("component").cast(aType).as("component"))
   }
 
+  /** Component assignment for every node that appears in `edges`
+    * (integral cols `a`, `b`): returns (id, component) where component =
+    * min node id reachable. Nodes with no edges are the caller's to union
+    * in (they are their own component and never entered the edge list).
+    */
   def components(
       edges: DataFrame, maxRounds: Int = 50,
       localThreshold: Long = 100000L): DataFrame = {
+    // Both paths read ids as 8-byte longs (the local path's cast, the
+    // fingerprint's getLong), so a fractional or non-numeric id would
+    // silently merge distinct nodes.
+    Seq("a", "b").foreach { c =>
+      val t = edges.schema(c).dataType
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+        s"Connected.components needs integral id columns; `$c` is ${t.simpleString}")
+    }
     // localCheckpoint each round: a round is ~6 nested operators, so the
     // un-truncated logical plan doubles per iteration and Catalyst analysis
     // goes exponential by round ~4 (measured: minutes on a 500-edge input).
@@ -141,24 +150,17 @@ object Connected {
     // first action, so it materializes the (tiny, two-long) edge rows AND
     // saves the checkpoint in ONE job instead of a materialize job followed
     // by a fingerprint job — half the scheduler round-trips per iteration
-    // (measured: the per-round cost here is job overhead, not data). The
-    // previous round is unpersisted only AFTER the new round's fingerprint
-    // materialized it, so truncated lineage never needs recomputing. On a
+    // (measured: the per-round cost here is job overhead, not data). On a
     // cluster this would be reliable `checkpoint` for fault tolerance.
     var e = canonical(edges).localCheckpoint(false)
     var fp = fingerprint(e) // materializes e; _1 is the exact edge count
-    if (fp._1 <= localThreshold) {
-      val local = componentsLocal(e)
-      e.unpersist()
-      return local
-    }
+    if (fp._1 <= localThreshold) return componentsLocal(e)
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {
       round += 1
       val next = smallStar(largeStar(e)).localCheckpoint(false)
       val nfp = fingerprint(next) // materializes `next` (and its checkpoint)
-      e.unpersist()
       e = next
       converged = nfp == fp
       fp = nfp

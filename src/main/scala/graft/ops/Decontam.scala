@@ -14,10 +14,13 @@ import graft.functions.{BloomFilterAgg, BloomMightContainLong}
   * so its distinct n-gram hashes broadcast; the corpus side explodes to
   * narrow (id, 8-byte hash) rows and broadcast-joins — the 100 TB corpus is
   * never shuffled by content and no all-pairs comparison exists. Matching is
-  * on xxhash64 of the gram (a false positive needs a 64-bit collision
-  * against the benchmark set); the hit COUNT per document is therefore
-  * identical to string-equality matching, which is what the DuckDB oracle
-  * (q53) checks.
+  * on the 64-bit gram hash of the compiled [[graft.functions.WordGramHashes]]
+  * expression (FNV-1a per word, polynomial combine per window), applied to
+  * both sides; a false positive needs a 64-bit collision against the
+  * benchmark set, so the hit COUNT per document is identical to
+  * string-equality matching, which is what the DuckDB oracle (q53) checks.
+  * [[contaminatedBloom]] is the one path that still hashes gram strings
+  * with xxhash64.
   */
 object Decontam {
 

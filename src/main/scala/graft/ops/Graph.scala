@@ -77,7 +77,6 @@ object Graph {
       .localCheckpoint(false)
 
     var rank = nodes.select(col("node"), lit(1000000L).as("rank_ppm"))
-    var periodic: Option[DataFrame] = None
     var i = 0
     while (i < iters) {
       i += 1
@@ -98,15 +97,7 @@ object Graph {
       // no per-round truncation is needed; an EAGER checkpoint every 8
       // rounds bounds both plan depth and recompute lineage for large
       // `iters` (50 max) without paying one job per round at small `iters`.
-      // The superseded periodic checkpoint is dropped only after the new
-      // one materialized (the Connected rule: truncated lineage must never
-      // need recomputing).
-      if (i % 8 == 0 && i < iters) {
-        val ck = rank.localCheckpoint(true)
-        periodic.foreach(_.unpersist())
-        periodic = Some(ck)
-        rank = ck
-      }
+      if (i % 8 == 0 && i < iters) rank = rank.localCheckpoint(true)
     }
     rank
   }

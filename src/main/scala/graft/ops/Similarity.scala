@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.engine.Validator
+
 /** Similarity search over an embedding column (`Array[Float]`):
   * brute-force cosine top-k as the exact baseline, and a deterministic
   * random-hyperplane LSH bucketed variant as the scale path (candidates come
@@ -42,19 +44,15 @@ object Similarity {
     else nn
   }
 
-  /** Stats-gated broadcast for the query side of the ANN joins (the
-    * `Validator.orphanViolations` pattern, r5 verdict item): the intended
-    * shape is a small query set riding a broadcast hash join, but a caller
-    * passing a corpus-sized query frame must degrade to a plain shuffle
-    * equi-join instead of OOMing the driver building the broadcast. The
-    * optimizer's size estimate decides; under the threshold the plan is
-    * byte-identical to the unconditional broadcast.
+  /** Stats-gated broadcast for the query side of the ANN joins
+    * ([[Validator.fitsBroadcast]]): the intended shape is a small query set
+    * riding a broadcast hash join, but a caller passing a corpus-sized
+    * query frame must degrade to a plain shuffle equi-join instead of
+    * collecting the whole frame into a broadcast. Under the budget the
+    * plan is byte-identical to the unconditional broadcast.
     */
-  private def broadcastIfSmall(
-      df: DataFrame, thresholdBytes: Long = 64L << 20): DataFrame =
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= thresholdBytes)
-      broadcast(df)
-    else df
+  private def broadcastIfSmall(df: DataFrame): DataFrame =
+    if (Validator.fitsBroadcast(df)) broadcast(df) else df
 
   /** Exact brute-force top-k: broadcast the (small) query set against the
     * full embedding table, rank per query. The join is broadcast-nested-loop
@@ -320,7 +318,7 @@ object Similarity {
     val e = realOnly(embeddings)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("bucket", lshBucket(col("v"), planes))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false)
     // narrow candidate generation (ids only), vectors joined back after —
     // same shape as Dedup.minhashLshPairs, avoids shipping vectors through
     // the quadratic part
@@ -366,7 +364,7 @@ object Similarity {
     val e = realOnly(embeddings)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("cid", ivfAssign(col("v"), centroids))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false)
     val ids = e.select(col("vec_id"), col("cid"))
     val ok = ids.join(
       ids.groupBy("cid").agg(count(lit(1)).as("cn"))

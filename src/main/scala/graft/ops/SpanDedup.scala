@@ -83,16 +83,15 @@ object SpanDedup {
 
   /** The shared pair topology behind both fingerprint faces: bucket
     * self-join on fp (ids only), `maxBucket` capped, pair = docs sharing
-    * ≥ `minShared` distinct fingerprints. Fingerprints are persisted
-    * first (the [[Dedup.lshCandidates]] rule): they feed the bucket-count
-    * aggregate AND both sides of the self-join, so without the persist the
-    * per-character fingerprint scan re-runs 4× — at 10^12 rows that is the
-    * whole job cost three times over.
+    * ≥ `minShared` distinct fingerprints. Fingerprints are checkpointed
+    * first (the [[Dedup.minhashLshPairs]] rule): they feed the bucket-count
+    * aggregate AND both sides of the self-join, so without the checkpoint
+    * the per-character fingerprint scan re-runs 4× — at 10^12 rows that is
+    * the whole job cost three times over.
     */
   private def pairsFrom(
       fpsRaw: DataFrame, minShared: Int, maxBucket: Int): DataFrame = {
-    val fps = fpsRaw
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val fps = fpsRaw.localCheckpoint(false)
     val ok = fps.join(
       fps.groupBy("fp").agg(count(lit(1)).as("bn"))
         .filter(col("bn") > 1 && col("bn") <= maxBucket),
@@ -140,10 +139,9 @@ object SpanDedup {
   def spanIncidence(
       df: DataFrame, textCol: String, idCol: String,
       k: Int = 16, w: Int = 8): DataFrame = {
-    // persisted for the same reason as [[pairsFrom]]: fps feeds both the
-    // frequency aggregate and the join-back
-    val fps = fingerprints(df, textCol, idCol, k, w)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // checkpointed for the same reason as [[pairsFrom]]: fps feeds both
+    // the frequency aggregate and the join-back
+    val fps = fingerprints(df, textCol, idCol, k, w).localCheckpoint(false)
     val shared = fps.groupBy("fp").agg(count(lit(1)).as("nf"))
       .filter(col("nf") > 1)
       .select(col("fp"), lit(1L).as("is_shared"))
@@ -197,14 +195,15 @@ object SpanDedup {
     val t = coalesce(col(textCol), lit(""))
     val id = col(idCol)
 
-    // persisted: feeds the frequency aggregate AND the drop-position join
-    // (the [[pairsFrom]] rule — unpersisted, the explode+hash scan re-runs)
+    // checkpointed: feeds the frequency aggregate AND the drop-position
+    // join (the [[pairsFrom]] rule — without it the explode+hash scan
+    // re-runs)
     val lines = df.select(
         id.as("id"), posexplode(split(t, "\n", -1)).as(Seq("pos", "line")))
       .filter(length(trim(col("line"))) >= minLineLen)
       .select(col("id"), col("pos"),
         conv(substring(md5(col("line")), 1, 15), 16, 10).cast("long").as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false)
 
     val frequent = lines.groupBy("h")
       .agg(count_distinct(col("id")).as("ndocs"))

@@ -36,16 +36,17 @@ object JsonlIngest {
       schema.fields :+ StructField(corruptCol, StringType, nullable = true))
     // Spark refuses corrupt-column-only queries over raw JSON scans
     // (SPARK-21610: the pruned scan would re-parse and see no corruption);
-    // the documented contract is to persist the PARSED batch first. An
-    // ingest drop is bounded (one delivery, not the corpus), and any
-    // two-output consumer of this split pays one materialization anyway —
-    // the CorpusPipeline persist rationale.
+    // the documented contract is to materialize the PARSED batch first. The
+    // lazy checkpoint is cut from the full-schema parse, so both outputs
+    // read rows that went through the corrupt-record column. An ingest drop
+    // is bounded (one delivery, not the corpus), and any two-output
+    // consumer of this split pays one materialization anyway.
     val raw = spark.read
       .schema(withAudit)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", corruptCol)
       .json(path)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(false)
     val clean = raw.filter(col(corruptCol).isNull)
       .drop(corruptCol)
     val corrupt = raw.filter(col(corruptCol).isNotNull)

@@ -98,6 +98,23 @@ class ConnectedSpec extends AnyFunSuite {
     }
   }
 
+  test("components requires integral ids: double ids fail naming the " +
+      "type; int and long ids pass on both paths") {
+    val e = intercept[IllegalArgumentException](
+      Connected.components(Seq((1.5, 1.7), (2.0, 3.0)).toDF("a", "b")))
+    assert(e.getMessage.contains("`a` is double"), e.getMessage)
+    val edges = Seq((5L, 3L), (10L, 11L), (11L, 12L))
+    val expected = Map(3L -> 3L, 5L -> 3L, 10L -> 10L, 11L -> 10L, 12L -> 10L)
+    val ints = edges.map { case (a, b) => (a.toInt, b.toInt) }.toDF("a", "b")
+    Seq(100000L, 0L).foreach { threshold =>
+      assert(Connected.components(edges.toDF("a", "b"),
+        localThreshold = threshold).as[(Long, Long)].collect().toMap === expected)
+      assert(Connected.components(ints, localThreshold = threshold)
+        .as[(Int, Int)].collect()
+        .map { case (a, b) => (a.toLong, b.toLong) }.toMap === expected)
+    }
+  }
+
   test("result is invariant under input partitioning") {
     val edges = (0L until 40L).map(i => (i, (i * 7 + 3) % 40)).filter(e => e._1 != e._2)
     val df1 = edges.toDF("a", "b").repartition(1)

@@ -225,6 +225,24 @@ class ValidatorSpec extends AnyFunSuite {
       (3L, 3L, "mob", "zzz")))
   }
 
+  test("allViolations: a dim over the broadcast budget keeps the " +
+      "standalone anti-join branch, with the folded run's rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dim").toString
+    convs.write.mode("overwrite").parquet(dir)
+    // inflates the parquet dim's size estimate past the 64 MB budget
+    val factor = "spark.sql.sources.fileCompressionFactor"
+    spark.conf.set(factor, "1e7")
+    try {
+      val dim = spark.read.parquet(dir)
+      assert(!Validator.fitsBroadcast(dim.select("conv_id").distinct()))
+      val anti = Validator.allViolations(turns, Some(dim))
+      val plan = anti.queryExecution.optimizedPlan.toString
+      assert(!plan.contains("__dim") && plan.contains("LeftAnti"), plan)
+      assert(anti.exceptAll(violations).isEmpty &&
+        violations.exceptAll(anti).isEmpty)
+    } finally spark.conf.unset(factor)
+  }
+
   test("merged ts+dup tail is row-identical to the standalone branch " +
       "functions (the shared text-attach optimization changes the plan, " +
       "never a byte)") {
