@@ -229,24 +229,22 @@ object ChatOps {
     require(k >= 1 && 1000000L % k == 0, "k must divide 10^6")
     val sigs = df
       .select(col(convCol), col(tieCol), col(roleCol),
-        Dedup.splitWords(col(textCol)).as("__w"))
-      .select(col(convCol), col(tieCol), col(roleCol),
-        explode(Dedup.shinglesOfWords(col("__w"), n)).as("__sh"))
-      .select(col(convCol), col(tieCol), col(roleCol),
-        xxhash64(col("__sh")).as("__h"))
+        explode(graft.functions.ShingleHashes.shingleHashes(
+          Dedup.splitWords(col(textCol)), n)).as("__h"))
       .groupBy(col(convCol), col(tieCol), col(roleCol))
       .agg(graft.functions.MinHashSignature.minhashSig(col("__h"), k)
         .as("__sig"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(convCol).orderBy(tieCol)
-    val matches = size(filter(
-      zip_with(col("__sig"), col("__prev"), (a, b) => a === b),
-      x => x))
+    // agreeing signature positions, one compiled comparison per position
+    val matches = (0 until k).map(j =>
+      when(col("__sig")(j) === col("__prev")(j), 1L).otherwise(0L))
+      .reduce(_ + _)
     sigs
       .withColumn("__prev", lag(col("__sig"), 1).over(w))
       .filter(col("__prev").isNotNull)
       .select(col(convCol), col(tieCol), col(roleCol),
-        (matches.cast("long") * (1000000L / k)).as("echo_ppm"))
+        (matches * (1000000L / k)).as("echo_ppm"))
       .withColumn("is_echo", col("echo_ppm") >= echoPpm)
   }
 

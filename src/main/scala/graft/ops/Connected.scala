@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
+import graft.engine.Validator
+
 /** Connected components over an edge list — the clustering step that turns
   * near-duplicate PAIRS (minhash/simhash/cosine output) into duplicate
   * GROUPS with one canonical keeper per group. The reference resolves
@@ -126,14 +128,25 @@ object Connected {
         col("component").cast(aType).as("component"))
   }
 
+  /** Hard ceiling of `localThreshold`: the local path collects up to this
+    * many 16-byte canonical edges to the driver — the broadcast budget's
+    * worth of bytes.
+    */
+  val localCeiling: Long = Validator.broadcastBudgetBytes / 16
+
   /** Component assignment for every node that appears in `edges`
     * (integral cols `a`, `b`): returns (id, component) where component =
     * min node id reachable. Nodes with no edges are the caller's to union
     * in (they are their own component and never entered the edge list).
+    * Graphs of at most `localThreshold` canonical edges resolve on the
+    * driver; `localThreshold` may not exceed [[localCeiling]].
     */
   def components(
       edges: DataFrame, maxRounds: Int = 50,
       localThreshold: Long = 100000L): DataFrame = {
+    require(localThreshold <= localCeiling,
+      s"localThreshold $localThreshold is over the $localCeiling-edge " +
+        "ceiling of the driver-side path")
     // Both paths read ids as 8-byte longs (the local path's cast, the
     // fingerprint's getLong), so a fractional or non-numeric id would
     // silently merge distinct nodes.

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{BloomFilterAgg, BloomMightContainLong}
+import graft.functions.{BloomFilterAgg, BloomMightContainLong, ShingleHashes}
 
 /** Benchmark decontamination: flag training documents that share any word
   * n-gram with an evaluation/benchmark set (the GPT-3-style 13-gram
@@ -19,8 +19,9 @@ import graft.functions.{BloomFilterAgg, BloomMightContainLong}
   * both sides; a false positive needs a 64-bit collision against the
   * benchmark set, so the hit COUNT per document is identical to
   * string-equality matching, which is what the DuckDB oracle (q53) checks.
-  * [[contaminatedBloom]] is the one path that still hashes gram strings
-  * with xxhash64.
+  * [[contaminatedBloom]] is the one path that hashes with xxhash64: it
+  * takes the xxhash64 of each gram string's bytes, through the
+  * compiled [[graft.functions.ShingleHashes]] expression.
   */
 object Decontam {
 
@@ -186,9 +187,8 @@ object Decontam {
       n: Int = 13,
       fpp: Double = 0.01): DataFrame = {
     val benchGrams = bench
-      .select(Dedup.splitWords(col(textCol)).as("__w"))
-      .select(explode(Dedup.shinglesOfWords(col("__w"), n)).as("g"))
-      .select(xxhash64(col("g")).as("gh"))
+      .select(explode(ShingleHashes.shingleHashes(
+        Dedup.splitWords(col(textCol)), n)).as("gh"))
       .distinct()
     val expected = math.max(benchGrams.count(), 1L)
     val bytes = benchGrams
@@ -196,10 +196,8 @@ object Decontam {
       .head().getAs[Array[Byte]](0)
     val filter = BloomFilterAgg.fromBytes(bytes)
     corpus
-      .select(col(keyCol).as("id"), Dedup.splitWords(col(textCol)).as("__w"))
-      .select(col("id"),
-        explode(Dedup.shinglesOfWords(col("__w"), n)).as("g"))
-      .select(col("id"), xxhash64(col("g")).as("gh"))
+      .select(col(keyCol).as("id"), explode(ShingleHashes.shingleHashes(
+        Dedup.splitWords(col(textCol)), n)).as("gh"))
       .filter(BloomMightContainLong.bloomMightContain(col("gh"), filter))
       .groupBy("id")
       .agg(count_distinct(col("gh")).as("n_hit_grams"))

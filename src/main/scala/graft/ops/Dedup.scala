@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.{ShingleHashes, ShingleJaccard}
+
 /** Deduplication operators for training-data pipelines: exact (hash-groupBy),
   * MinHash+LSH (shingle → minhash → band → bucket self-join), SimHash with
   * Hamming-band blocking, and word-shingle Jaccard verification. All pure
@@ -73,10 +75,14 @@ object Dedup {
   def shingles(c: Column, n: Int = 3): Column =
     shinglesOfWords(splitWords(c), n)
 
-  /** MinHash signatures: explode shingles to rows, hash each shingle string
-    * ONCE, then compute all k running minima in a single native
+  /** MinHash signatures: hash every word-`n`-gram shingle ONCE in the
+    * compiled [[graft.functions.ShingleHashes]] pass (xxhash64 of the
+    * shingle string, bit-identical to `xxhash64(explode(shinglesOfWords))`
+    * without building the strings), explode the hashes to rows, then
+    * compute all k running minima in a single native
     * [[graft.functions.MinHashSignature]] aggregate (one buffer of k longs,
-    * map-side partial combine, outer hash mixed once per row).
+    * map-side partial combine, outer hash mixed once per row). A shingle
+    * repeated within a document repeats its hash, which the minima ignore.
     *
     * History of this shape (both alternatives measured): nested
     * higher-order-function lambdas run interpreted (~30x slower, re-built
@@ -94,22 +100,23 @@ object Dedup {
       n: Int = 3,
       k: Int = 64): DataFrame = {
     df
-      .select(col(keyCol).as("id"), splitWords(col(textCol)).as("__w"))
-      .select(col("id"), explode(shinglesOfWords(col("__w"), n)).as("sh"))
-      .select(col("id"), xxhash64(col("sh")).as("h"))
+      .select(col(keyCol).as("id"),
+        explode(ShingleHashes.shingleHashes(splitWords(col(textCol)), n))
+          .as("h"))
       .groupBy("id")
       .agg(graft.functions.MinHashSignature.minhashSig(col("h"), k).as("sig"))
   }
 
   /** LSH band keys: split the k-length signature into `bands` bands of
     * k/bands rows each; band key = hash(band slice, band index). Documents
-    * sharing any band key become candidate pairs.
+    * sharing any band key become candidate pairs. One compiled expression
+    * per band (a `transform` lambda over the band indices runs
+    * interpreted).
     */
   def bandKeys(sigCol: Column, k: Int = 64, bands: Int = 16): Column = {
     val r = k / bands
-    transform(
-      sequence(lit(0), lit(bands - 1)),
-      b => xxhash64(slice(sigCol, b * r + 1, lit(r)), b))
+    array((0 until bands).map(b =>
+      xxhash64(slice(sigCol, lit(b * r + 1), lit(r)), lit(b))): _*)
   }
 
   /** MinHash-LSH near-duplicate candidate pairs with exact word-shingle
@@ -242,26 +249,19 @@ object Dedup {
     // once the timed iterations stop reusing the warm-up's cache.
     val sigs = minhashSignatures(df, textCol, keyCol, n, k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // text joins back to the (rare) candidate pairs as before — but the
-    // exact-Jaccard verify is STAGED: words, then shingle arrays, then
-    // the intersection, each in its own projection. Inline jaccard()
-    // here re-split the text per shingle element (the interpreted-HOF
-    // trap); joining pre-built shingle ARRAYS instead was measured 6×
-    // WORSE (every doc pays the build and the join moves arrays bigger
-    // than the text) — staging after the join computes shingles only
-    // for candidates and moves only text.
+    // Text joins back to the (rare) candidate pairs only — joining
+    // pre-built shingle arrays instead was measured 6× worse (every doc
+    // pays the build and the join moves arrays bigger than the text).
+    // Each pair is verified ONCE by the compiled exact Jaccard: it emits
+    // [j] or [] and the explode keeps the pair, so no `jaccard >=
+    // threshold` Filter exists for Catalyst to push into the join
+    // condition while the projection recomputes the Jaccard.
     lshCandidates(sigs, k, bands, maxBucket)
       .join(df.select(col(keyCol).as("id_a"), col(textCol).as("text_a")), "id_a")
       .join(df.select(col(keyCol).as("id_b"), col(textCol).as("text_b")), "id_b")
       .select(col("id_a"), col("id_b"),
-        splitWords(col("text_a")).as("__wa"),
-        splitWords(col("text_b")).as("__wb"))
-      .select(col("id_a"), col("id_b"),
-        shinglesOfWords(col("__wa"), n).as("sh_a"),
-        shinglesOfWords(col("__wb"), n).as("sh_b"))
-      .select(col("id_a"), col("id_b"),
-        jaccardOfShingles(col("sh_a"), col("sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+        explode(ShingleJaccard.shingleJaccard(splitWords(col("text_a")),
+          splitWords(col("text_b")), n, threshold)).as("jaccard"))
   }
 
   /** 64-bit SimHash per document: bit i of the hash is the sign of the sum

@@ -99,6 +99,10 @@ object Graph {
       // `iters` (50 max) without paying one job per round at small `iters`.
       if (i % 8 == 0 && i < iters) rank = rank.localCheckpoint(true)
     }
-    rank
+    // The result is a LAZY checkpoint: the caller's first action runs the
+    // rounds since the last periodic checkpoint once and saves the ranks;
+    // every later action (or frame derived from the result) reads them
+    // instead of re-running up to 8 rounds of joins.
+    rank.localCheckpoint(false)
   }
 }

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.{CharTrigramCodes, PackCodePoints, UnpackCodePoints}
+
 /** Character-trigram language-model scoring — the CCNet/Wenzek-style
   * quality gate a 100 TB corpus build actually runs: train a smoothed
   * char-trigram LM on a reference slice (the in-language / trusted half of
@@ -12,7 +14,12 @@ import org.apache.spark.sql.functions._
   * (`/root/reference/src/core/genai_model.py:27-95`).
   *
   * Scale shape (the whole point):
-  *   - TRAIN is one shuffle of narrow (trigram) rows into a HashAggregate
+  *   - A trigram is one packed long ([[graft.functions.CharTrigramCodes]]:
+  *     three 21-bit code points of the lowercased text), emitted by one
+  *     compiled pass per document — no string per trigram position. The
+  *     counts, vocab and both model lookups key on that code; only the
+  *     surviving model rows decode back to (tri, bg) strings.
+  *   - TRAIN is one shuffle of narrow (code) rows into a HashAggregate
   *     with map-side combine; bigram-prefix counts re-aggregate the trigram
   *     counts — never a second pass over text.
   *   - The model is BOUNDED BY CONSTRUCTION: a trigram survives only if
@@ -22,9 +29,9 @@ import org.apache.spark.sql.functions._
   *     100 TB unicode corpus. Pruned/unseen mass falls to the same add-1
   *     smoothed floor the estimator already assigns to unseen trigrams.
   *   - SCORE is map-side: the doc trigram stream broadcast-joins the model
-  *     (two narrow lookups), then ONE groupBy(doc) sum with partial
-  *     aggregation. Document text never reaches an exchange; only (id,
-  *     trigram) rows shuffle, and only at the final per-doc sum.
+  *     (two narrow long-keyed lookups), then ONE groupBy(doc) sum with
+  *     partial aggregation. Document text never reaches an exchange; only
+  *     narrow per-doc partial sums shuffle, at the final per-doc sum.
   *   - Parity-friendly math: every quantity is an exact integer count until
   *     the single (c3+1)/(c2+V) division, one natural log per trigram (the
   *     libm call DuckDB agrees with bit-for-bit in practice — the q70
@@ -38,21 +45,23 @@ object LangModel {
     */
   val Ln2 = 0.6931471805599453
 
-  /** (id, tri) stream: lowercase, raw char trigrams. Docs under 3 chars
-    * contribute nothing (explode of the empty array).
+  /** (id, tc) stream: one packed trigram code per position of the
+    * lowercased text ([[CharTrigramCodes]]: three 21-bit code points,
+    * `tc & 0x1FFFFF` the third character, `tc >>> 21` the bigram prefix).
+    * Docs under 3 characters contribute nothing (explode of the empty
+    * array).
     */
   private[ops] def trigramStream(
       df: DataFrame, idCol: String, textCol: String,
-      extraCols: Seq[String] = Nil): DataFrame = {
-    val t = lower(col(textCol))
-    val n = length(t)
-    val idx = when(n >= 3, sequence(lit(1), n - 2))
-      .otherwise(array().cast("array<int>"))
-    val extras = extraCols.map(col)
-    df.select(col(idCol) +: extras :+ t.as("__t") :+ explode(idx).as("__i"): _*)
-      .select(col(idCol) +: extras :+
-        col("__t").substr(col("__i"), lit(3)).as("tri"): _*)
-  }
+      extraCols: Seq[String] = Nil): DataFrame =
+    df.select(col(idCol) +: extraCols.map(col) :+
+      explode(CharTrigramCodes.charTrigramCodes(lower(col(textCol))))
+        .as("tc"): _*)
+
+  /** Third character and bigram prefix of a packed trigram code. */
+  private def third(tc: Column): Column = tc.bitwiseAND(lit(CharTrigramCodes.Mask))
+  private def prefix(tc: Column): Column =
+    shiftrightunsigned(tc, CharTrigramCodes.Bits)
 
   /** Train the smoothed trigram model over `ref`. Returns
     * (model3, model2, vocabSize):
@@ -61,9 +70,13 @@ object LangModel {
     *           counts (true bigram mass), pruned by the same fraction
     *   vocabSize: distinct third characters in the full counts — the add-1
     *           denominator V (bounded by the alphabet).
-    * The count frame is localCheckpoint'ed: three consumers, computed once,
-    * lineage truncated (the Connected.scala pattern — no global cache
-    * registry, nothing for a caller to leak).
+    * (tri, bg) are strings of 3 and 2 characters, as a substring of the
+    * lowercased text would give them.
+    * The count frame is keyed on the packed trigram code and
+    * localCheckpoint'ed: three consumers, computed once, lineage truncated
+    * (the Connected.scala pattern — no global cache registry, nothing for
+    * a caller to leak). Only the surviving model rows decode back to
+    * strings.
     */
   def train(
       ref: DataFrame, idCol: String, textCol: String,
@@ -74,7 +87,7 @@ object LangModel {
     // (the Connected rule) — an eager checkpoint here paid one extra
     // scheduler round-trip per train() call for the same single pass.
     val c3full = trigramStream(ref, idCol, textCol)
-      .groupBy("tri").agg(count(lit(1)).as("c3"))
+      .groupBy("tc").agg(count(lit(1)).as("c3"))
       .localCheckpoint(false)
     // ONE driver action fetches vocab AND the total: the vocab countDistinct
     // was already an unavoidable driver round-trip, so the total rides the
@@ -83,17 +96,20 @@ object LangModel {
     // aggregate + broadcast build each) vanish from the scoring plan.
     // ceil(minFrac · total) is the identical IEEE double chain either way.
     val row = c3full.agg(
-      countDistinct(substring(col("tri"), 3, 1)).as("__v"),
+      countDistinct(third(col("tc"))).as("__v"),
       sum("c3").as("__total")).first()
     val vocab = row.getLong(0)
     val total = if (row.isNullAt(1)) 0L else row.getLong(1) // null on empty ref
     val thr = math.ceil(minFrac * total.toDouble).toLong
-    val model3 = c3full.filter(col("c3") >= thr).select(col("tri"), col("c3"))
+    val model3 = c3full.filter(col("c3") >= thr)
+      .select(UnpackCodePoints.unpackCodePoints(col("tc"), 3).as("tri"),
+        col("c3"))
     val model2 = c3full
-      .groupBy(substring(col("tri"), 1, 2).as("bg"))
+      .groupBy(prefix(col("tc")).as("bc"))
       .agg(sum("c3").as("c2"))
       .filter(col("c2") >= thr)
-      .select(col("bg"), col("c2"))
+      .select(UnpackCodePoints.unpackCodePoints(col("bc"), 2).as("bg"),
+        col("c2"))
     (model3, model2, vocab)
   }
 
@@ -102,16 +118,21 @@ object LangModel {
     * prefix → 1/(c2+V); unseen/pruned prefix → 1/V — both are the same
     * formula with the missing count coalesced to 0. Output: (idCol, n_tris,
     * xent_bits) for docs with ≥ 1 trigram; lower is more in-distribution.
+    * The model keys encode to packed codes ([[PackCodePoints]]) so both
+    * lookups join on longs; a key that is not exactly 3 (or 2) characters
+    * encodes to NULL and matches nothing.
     */
   def crossEntropy(
       docs: DataFrame, idCol: String, textCol: String,
       model3: DataFrame, model2: DataFrame, vocabSize: Long): DataFrame = {
     require(vocabSize > 0, "empty training corpus")
-    val tris = trigramStream(docs, idCol, textCol)
-    val joined = tris
-      .join(broadcast(model3), Seq("tri"), "left")
-      .join(broadcast(model2.withColumnRenamed("bg", "__bg")),
-        substring(col("tri"), 1, 2) === col("__bg"), "left")
+    val m3 = model3.select(
+      PackCodePoints.packCodePoints(col("tri"), 3).as("__tc"), col("c3"))
+    val m2 = model2.select(
+      PackCodePoints.packCodePoints(col("bg"), 2).as("__bc"), col("c2"))
+    val joined = trigramStream(docs, idCol, textCol)
+      .join(broadcast(m3), col("tc") === col("__tc"), "left")
+      .join(broadcast(m2), prefix(col("tc")) === col("__bc"), "left")
       .select(col(idCol),
         (coalesce(col("c3"), lit(0L)) + 1).as("num"),
         (coalesce(col("c2"), lit(0L)) + vocabSize).as("den"))
@@ -176,7 +197,7 @@ object LangModel {
     val c3both = trigramStream(
       docs.select(col(idCol), col(textCol), targetFilter.as("__tgt")),
       idCol, textCol, extraCols = Seq("__tgt"))
-      .groupBy("tri")
+      .groupBy("tc")
       .agg(count(lit(1)).as("c3r"),
         sum(when(col("__tgt"), 1L).otherwise(0L)).as("c3t"))
       .localCheckpoint(false)
@@ -185,9 +206,8 @@ object LangModel {
     // its own slice) AND both totals, so the prune thresholds are literals
     // (the train() pattern — no totals-broadcast subtrees in the plan).
     val vrow = c3both.agg(
-      countDistinct(substring(col("tri"), 3, 1)).as("vr"),
-      countDistinct(
-        when(col("c3t") > 0, substring(col("tri"), 3, 1))).as("vt"),
+      countDistinct(third(col("tc"))).as("vr"),
+      countDistinct(when(col("c3t") > 0, third(col("tc")))).as("vt"),
       sum("c3r").as("tr"),
       sum("c3t").as("tt")).first()
     val vr = vrow.getLong(0)
@@ -195,28 +215,27 @@ object LangModel {
     require(vt > 0 && vr > 0, "empty training slice")
     val thrT = math.ceil(minFrac * vrow.getLong(3).toDouble).toLong
     val thrR = math.ceil(minFrac * vrow.getLong(2).toDouble).toLong
-    // MERGED per-key models: both sides' kept counts ride one (tri) frame
-    // and one (bg) frame, with a count masked to null exactly when that
+    // MERGED per-key models: both sides' kept counts ride one (tc) frame
+    // and one (bigram-prefix) frame, with a count masked to null exactly when that
     // side's train() would have pruned the entry — so the scoring stream
     // pays TWO broadcast-join probes per trigram instead of four, and each
     // probed row is identical to what the per-model join produced.
     val m3 = c3both
-      .select(col("tri"),
+      .select(col("tc").as("__tc"),
         when(col("c3t") >= thrT, col("c3t")).as("c3t"),
         when(col("c3r") >= thrR, col("c3r")).as("c3r"))
       .filter(col("c3t").isNotNull || col("c3r").isNotNull)
     val m2 = c3both
-      .groupBy(substring(col("tri"), 1, 2).as("bg"))
+      .groupBy(prefix(col("tc")).as("__bc"))
       .agg(sum(when(col("c3t") > 0, col("c3t"))).as("s2t"),
         sum("c3r").as("s2r"))
-      .select(col("bg").as("__bg"),
+      .select(col("__bc"),
         when(col("s2t") >= thrT, col("s2t")).as("c2t"),
         when(col("s2r") >= thrR, col("s2r")).as("c2r"))
       .filter(col("c2t").isNotNull || col("c2r").isNotNull)
-    val tris = trigramStream(docs, idCol, textCol)
-    val joined = tris
-      .join(broadcast(m3), Seq("tri"), "left")
-      .join(broadcast(m2), substring(col("tri"), 1, 2) === col("__bg"), "left")
+    val joined = trigramStream(docs, idCol, textCol)
+      .join(broadcast(m3), col("tc") === col("__tc"), "left")
+      .join(broadcast(m2), prefix(col("tc")) === col("__bc"), "left")
     val lt = log((coalesce(col("c3t"), lit(0L)) + 1).cast("double") /
       (coalesce(col("c2t"), lit(0L)) + vt))
     val lr = log((coalesce(col("c3r"), lit(0L)) + 1).cast("double") /

@@ -50,9 +50,17 @@ object Similarity {
     * query frame must degrade to a plain shuffle equi-join instead of
     * collecting the whole frame into a broadcast. Under the budget the
     * plan is byte-identical to the unconditional broadcast.
+    *
+    * The gate sizes `queries`, the query frame BEFORE its probe explode,
+    * times the `probes` rows each query explodes into: the optimizer
+    * estimates a Generate at its child's size whatever its fan-out, so
+    * the estimate of `probed` itself misses the probe rows.
     */
-  private def broadcastIfSmall(df: DataFrame): DataFrame =
-    if (Validator.fitsBroadcast(df)) broadcast(df) else df
+  private def broadcastIfSmall(
+      probed: DataFrame, queries: DataFrame, probes: Int): DataFrame =
+    if (Validator.fitsBroadcast(queries,
+        Validator.broadcastBudgetBytes / math.max(probes, 1))) broadcast(probed)
+    else probed
 
   /** Exact brute-force top-k: broadcast the (small) query set against the
     * full embedding table, rank per query. The join is broadcast-nested-loop
@@ -117,10 +125,12 @@ object Similarity {
       else array(b)
     val q = realOnly(queries).select(col("vec_id").as("query_id"),
       asDouble(col("embedding")).as("qv"))
+    val probed = q
       .withColumn("bucket", explode(probes(lshBucket(col("qv"), planes))))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cos").desc, col("vec_id"))
-    e.join(broadcastIfSmall(q), Seq("bucket"))
+    e.join(broadcastIfSmall(probed, q, if (multiprobe) nBits + 1 else 1),
+        Seq("bucket"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         cosine(col("v"), col("qv")).as("cos"))
@@ -254,8 +264,9 @@ object Similarity {
     }
     val q = realOnly(queries).select(col("vec_id").as("query_id"),
       asDouble(col("embedding")).as("qv"))
-      .withColumn("cid", explode(probeList))
-    e.join(broadcastIfSmall(q), Seq("cid"))
+    val probed = q.withColumn("cid", explode(probeList))
+    e.join(broadcastIfSmall(probed, q, math.min(nProbe, cents.size)),
+        Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         cosine(col("v"), col("qv")).as("cos"))

@@ -124,4 +124,20 @@ class ConnectedSpec extends AnyFunSuite {
     assert(r1 === r7)
     assert(r1 === ufOracle(edges).toSet)
   }
+
+  test("localThreshold has a hard ceiling of the broadcast budget / 16 " +
+    "edges: at the ceiling the local path runs, above it the call fails") {
+    assert(Connected.localCeiling ===
+      graft.engine.Validator.broadcastBudgetBytes / 16)
+    val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L))
+    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L)
+    assert(Connected.components(edges.toDF("a", "b"),
+        localThreshold = Connected.localCeiling)
+      .as[(Long, Long)].collect().toMap === expected)
+    val e = intercept[IllegalArgumentException](
+      Connected.components(edges.toDF("a", "b"),
+        localThreshold = Connected.localCeiling + 1))
+    assert(e.getMessage.contains(s"${Connected.localCeiling}-edge ceiling"),
+      e.getMessage)
+  }
 }

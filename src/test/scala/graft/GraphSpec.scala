@@ -55,4 +55,25 @@ class GraphSpec extends AnyFunSuite {
       s"hub > linked spoke > unlinked spoke: $r")
     assert((2L to 10L).map(r).distinct.size === 1)
   }
+
+  test("the result is checkpointed: after the first action, a frame " +
+    "derived from it plans no join round and reads the saved ranks") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.LogicalRDD
+    val edges = (0L until 30L).map(i => (i, (i * 7 + 3) % 30))
+    // 5 rounds: no periodic checkpoint; 8: the last round is periodic-
+    // aligned; 9: one periodic checkpoint, then one more round
+    Seq(5, 8, 9).foreach { iters =>
+      val r = Graph.pagerankInt(edges.toDF("s", "d"), "s", "d", iters)
+      val first = r.as[(Long, Long)].collect().toMap
+      val derived = r.agg(sum("rank_ppm"))
+      val plan = derived.queryExecution.analyzed
+      assert(plan.collect { case j: Join => j }.isEmpty,
+        s"iters=$iters: derived frame re-plans join rounds:\n$plan")
+      val saved = plan.collect { case l: LogicalRDD => l.rdd }
+      assert(saved.nonEmpty && saved.forall(_.isCheckpointed),
+        s"iters=$iters: ranks not saved by the first action")
+      assert(derived.head().getLong(0) === first.values.sum)
+    }
+  }
 }

@@ -602,4 +602,105 @@ class PlanSpec extends AnyFunSuite {
     assert(exchanges.nonEmpty)
     assert(!exchanges.exists(_.contains("text#")), s"text shuffled in:\n$p")
   }
+
+  test("trigram and shingle ops run no interpreted lambda; the exact " +
+    "Jaccard is evaluated once per pair; LM model joins broadcast") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import graft.functions.ShingleJaccard
+    import graft.ops.{ChatOps, Decontam, Dedup, LangModel}
+    val docs = (0 until 60).map { i =>
+      (i.toLong, s"shared opening words for topic ${i % 6} then body $i " +
+        s"and closing words ${i % 6}", i % 2 == 0)
+    }.toDF("doc_id", "text", "tgt")
+    val turns = docs.select((col("doc_id") % 5).as("conv_id"),
+      col("doc_id").as("turn_idx"), lit("user").as("role"), col("text"))
+    val (m3, m2, v) = LangModel.train(docs, "doc_id", "text")
+    val ops = Seq(
+      "train.model3" -> m3, "train.model2" -> m2,
+      "crossEntropy" -> LangModel.crossEntropy(docs, "doc_id", "text",
+        m3, m2, v),
+      "importanceWeights" -> LangModel.importanceWeights(docs, "doc_id",
+        "text", col("tgt")),
+      "minhashSignatures" -> Dedup.minhashSignatures(docs, "text", "doc_id"),
+      "minhashLshPairsExact" -> Dedup.minhashLshPairsExact(docs, "text",
+        "doc_id"),
+      "echoSignals" -> ChatOps.echoSignals(turns, "conv_id", "turn_idx",
+        "role", "text"),
+      "contaminatedBloom" -> Decontam.contaminatedBloom(docs,
+        docs.limit(3), "text", "doc_id", n = 4))
+    ops.foreach { case (name, df) =>
+      val p = plan(df).toLowerCase
+      assert(!p.contains("lambdafunction"), s"$name runs a lambda:\n$p")
+      assert(!p.contains("concat_ws") && !p.contains("substr"),
+        s"$name builds a string per gram:\n$p")
+    }
+    Seq("crossEntropy", "importanceWeights").foreach { name =>
+      val p = plan(ops.toMap.apply(name))
+      assert("""BroadcastHashJoin""".r.findAllIn(p).size >= 4 &&
+        !p.contains("SortMergeJoin"), s"$name model joins must broadcast:\n$p")
+    }
+
+    // Count ShingleJaccard evaluations in the FINAL adaptive plan.
+    val helper = new AdaptiveSparkPlanHelper {}
+    def verifies(df: org.apache.spark.sql.DataFrame): Int = {
+      df.collect()
+      helper.flatMap(df.queryExecution.executedPlan)(_.expressions
+        .flatMap(_.collect { case j: ShingleJaccard => j })).size
+    }
+    val pairs = Dedup.minhashLshPairsExact(docs, "text", "doc_id",
+      threshold = 0.5)
+    assert(pairs.count() > 0)
+    assert(verifies(pairs) === 1)
+    // A scalar Jaccard under a Filter would be evaluated twice: the filter
+    // is pushed into the join condition and the projection recomputes it.
+    val a = docs.select(col("doc_id").as("ia"), col("text").as("ta"))
+    val b = docs.select(col("doc_id").as("ib"), col("text").as("tb"))
+    val scalar = a.join(b, col("ia") < col("ib") && col("ia") + 6 === col("ib"))
+      .select(col("ia"), col("ib"), element_at(ShingleJaccard.shingleJaccard(
+        Dedup.splitWords(col("ta")), Dedup.splitWords(col("tb")), 3, 0.0), 1)
+        .as("j"))
+      .filter(col("j") >= 0.5)
+    assert(verifies(scalar) === 2)
+  }
+
+  test("ANN query-side broadcast gate: the pre-explode query frame times " +
+    "its probe count must fit the budget") {
+    import spark.implicits._
+    import graft.ops.Similarity
+    val emb = (0 until 40).map { i =>
+      (i.toLong, Array.tabulate(64)(j => ((i * 7 + j) % 11 + 1).toFloat))
+    }.toDF("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("graft_q").toString
+    emb.write.mode("overwrite").parquet(dir)
+    // the query frame as annTopK builds it before the probe explode
+    def pre(q: DataFrame) = q.filter(col("embedding").isNotNull)
+      .select(col("vec_id").as("query_id"),
+        col("embedding").cast("array<double>").as("qv"))
+    def broadcasts(q: DataFrame, multiprobe: Boolean) =
+      plan(Similarity.annTopK(emb, q, multiprobe = multiprobe))
+        .contains("BroadcastHashJoin")
+    val auto = "spark.sql.autoBroadcastJoinThreshold"
+    val factor = "spark.sql.sources.fileCompressionFactor"
+    val prevAuto = spark.conf.get(auto)
+    spark.conf.set(auto, "-1") // only the gate's hint may broadcast
+    try {
+      assert(broadcasts(spark.read.parquet(dir), multiprobe = true))
+      // inflate the query estimate to half the budget: it fits alone, and
+      // its 9 probe rows per query (nBits = 8, multiprobe) do not
+      val size = pre(spark.read.parquet(dir))
+        .queryExecution.optimizedPlan.stats.sizeInBytes.toDouble
+      spark.conf.set(factor,
+        (Validator.broadcastBudgetBytes / 2.0 / size).toString)
+      val big = spark.read.parquet(dir)
+      assert(Validator.fitsBroadcast(pre(big)))
+      assert(!Validator.fitsBroadcast(pre(big),
+        Validator.broadcastBudgetBytes / 9))
+      assert(!broadcasts(big, multiprobe = true))
+      assert(broadcasts(big, multiprobe = false))
+    } finally {
+      spark.conf.unset(factor)
+      spark.conf.set(auto, prevAuto)
+    }
+  }
 }
